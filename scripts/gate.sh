@@ -32,6 +32,17 @@ codegen_tripwire() {
     exit 1
   fi
 }
+# Listing tripwire: Hadoop's `fs.listFiles(path, recursive)` and
+# `listLocatedStatus` build a LocatedFileStatus per file, which reads the
+# file's permissions — without the native Hadoop library every such read
+# on a local file forks a subprocess (~4 ms per file, about a second per
+# index maintenance cycle). Walk with `listStatus` instead. java.io.File's
+# no-argument `listFiles()` is a different API and stays allowed.
+echo "== gate: listing tripwire (src/main)"
+if grep -rnE '\.listFiles\(\s*([^)[:space:]]|$)|listLocatedStatus\(' src/main; then
+  echo "GATE FAIL: per-file LocatedFileStatus listing under src/main"
+  exit 1
+fi
 SF_DIR="${1:-/root/testdata/sf0.01}"
 shift || true
 echo "== gate: frozen bench-corpus checksum"

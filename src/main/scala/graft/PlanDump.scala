@@ -6,6 +6,7 @@ import java.nio.file.{Files, Paths}
 /** Dump `.explain("formatted")` for named queries to `<outDir>/<q>.txt`
   * — the committed plan evidence for optimization rounds (plans/rNN/).
   * Usage: runMain graft.PlanDump <outDir> <q1,q2,...> [suffix]
+  * Exits 1 when any requested query is unknown or fails.
   * Session config mirrors Bench so the captured plan is the plan the
   * bench actually times (same AQE / shuffle-partition settings).
   */
@@ -35,9 +36,9 @@ object PlanDump {
     val matched = SparkEntry.queries.filter { case (k, _) => names(k) }
     // a requested name that matches no query is an evidence bug, not a
     // silent no-op — the committed plans must cover what was asked for
-    (names -- matched.keySet).toSeq.sorted
-      .foreach(n => println(s"PLAN $n UNKNOWN: no such query"))
-    matched.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+    val unknown = (names -- matched.keySet).toSeq.sorted
+    unknown.foreach(n => println(s"PLAN $n UNKNOWN: no such query"))
+    val failed = matched.toSeq.sortBy(_._1).filterNot { case (name, fn) =>
         try {
           val df = fn(spark, sfDir)
           // EXECUTE before dumping so the formatted plan is the AQE-final
@@ -52,10 +53,15 @@ object PlanDump {
           Files.write(Paths.get(outDir, s"$name$suffix.txt"),
             txt.getBytes("UTF-8"))
           println(s"PLAN $name -> $outDir/$name$suffix.txt")
+          true
         } catch { case e: Throwable =>
           println(s"PLAN $name FAILED: ${e.getMessage}")
+          false
         }
       }
     spark.stop()
+    // a missing or failed plan is a named failure AND a non-zero exit,
+    // so a script capturing plans cannot commit a partial set
+    if (unknown.nonEmpty || failed.nonEmpty) sys.exit(1)
   }
 }

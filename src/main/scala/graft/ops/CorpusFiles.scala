@@ -45,11 +45,9 @@ object CorpusFiles {
     require(n <= Int.MaxValue, s"$dir: $bytes bytes / $targetBytes per file " +
       "needs more than Int.MaxValue output files")
     IndexFiles.compactWith(spark, parent.toString, p.getName) { df =>
-      val shaped =
-        if (sortCols.isEmpty) df.repartition(n.toInt)
-        else df.repartitionByRange(n.toInt, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      shaped.write.mode("overwrite")
+      if (sortCols.isEmpty) df.repartition(n.toInt)
+      else df.repartitionByRange(n.toInt, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*)
     }
   }
 
@@ -131,8 +129,7 @@ object CorpusFiles {
       hot: (org.apache.hadoop.fs.Path, Int, Long)): DataFrame = {
     val (part, _, bytes) = hot
     val n = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    IndexFiles.compactWith(spark, dir, part.getName)(df =>
-      df.repartition(n).write.mode("overwrite"))
+    IndexFiles.compactWith(spark, dir, part.getName)(_.repartition(n))
       .withColumn("partition",
         org.apache.spark.sql.functions.lit(part.getName))
   }

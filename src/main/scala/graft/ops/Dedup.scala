@@ -158,14 +158,16 @@ object Dedup {
     * contents); md5 hashes arrays and strings alike, so the vector
     * route shares the shape.
     *
-    * Both frames are EAGERLY locally checkpointed (the Bpe word-table
-    * trick). The routed operators consume `reps`/`members` many times
+    * Both frames are LAZILY locally checkpointed
+    * (`localCheckpoint(false)`: the first consumer's job materializes
+    * the blocks, with no eager barrier job of its own). The routed
+    * operators consume `reps`/`members` many times
     * (semDedup ~10x: trainer jobs, assignment, pairing, verify;
     * [[expandFamilyPairs]] 2–4x), and Spark re-executes shared lazy
     * subtrees per consumer — the r15 zipfian skew battery paid the
     * family groupBy ~7x per query (routed simhash 2.7 s → 9.3 s
     * round-over-round). The checkpoint runs the groupBy exactly ONCE;
-    * every consumer then reads executor-local blocks (spec-pinned:
+    * every later consumer reads executor-local blocks (spec-pinned:
     * the routed plans' only leaves are checkpoint scans). Storage is
     * bounded — one content copy per DISTINCT content plus two ids per
     * input row — and released by the ContextCleaner when the returned
@@ -230,7 +232,7 @@ object Dedup {
     // the pair-formers consume members 2-4x (expansion joins) — the
     // checkpoint makes those single-execution; a caller that consumes
     // members exactly ONCE (semDedup's propagation join) skips it and
-    // saves the eager corpus-scan job
+    // saves materializing the member blocks
     (reps, if (checkpointMembers) members.localCheckpoint(false) else members)
   }
 

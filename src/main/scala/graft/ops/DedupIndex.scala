@@ -172,9 +172,10 @@ object DedupIndex {
     * this operator exists to avoid) — buckets can drift over the cap
     * until the periodic [[build]] rebuild, which re-caps and re-records
     * the drop count. Returns one row per batch doc:
-    * (batch_id, status, ref_id, est_jaccard), read back from the
-    * `last_ingest/` receipt the verdicts are durably written to before
-    * the index mutates (see the barrier note in the body). */
+    * (batch_id, status, ref_id, est_jaccard): the `last_ingest/`
+    * receipt the verdicts are durably written to before the index
+    * mutates (see the barrier note in the body), read once — the same
+    * frame gates the append and is returned. */
   def ingest(spark: SparkSession, path: String, batch: DataFrame,
       idCol: String, textCol: String,
       threshold: Double = 0.5): DataFrame = {
@@ -235,7 +236,7 @@ object DedupIndex {
       .write.mode("append").partitionBy("__pb")
       .parquet(s"$path/keys")
     bkeys.unpersist()
-    spark.read.parquet(receiptPath)
+    receipt
   }
 
   /** Layout-only maintenance: rewrite `keys/` so each `__pb=` partition

@@ -352,10 +352,9 @@ object PqIndex {
     * [[IndexFiles.compactWith]]; heal an interrupted swap with
     * [[recover]]. Returns (rows, files_before, files_after). */
   def compact(spark: SparkSession, path: String): DataFrame =
-    IndexFiles.compactWith(spark, path, "cells") { df =>
+    IndexFiles.compactWith(spark, path, "cells", "__cell") { df =>
       IndexFiles.writeShaped(df, col("__cell"))
         .sortWithinPartitions(col(df.columns.head))
-        .write.mode("overwrite").partitionBy("__cell")
     }
 
   /** Heal a [[compact]] swap interrupted mid-crash-window; no-op on a

@@ -202,4 +202,95 @@ class DedupIndexSpec extends AnyFunSuite {
       .collect().map(_.getAs[Long]("corpus_id")).toSet
     assert(m.contains(40000L), s"post-compaction query missed: $m")
   }
+
+  /** Parquet files under `dir`, counted by a plain `java.nio` walk —
+    * independent of the Hadoop listing the receipts use. */
+  private def parquetFileCount(dir: String): Long = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.filter(_.getFileName.toString.endsWith(".parquet")).count()
+    finally walk.close()
+  }
+
+  /** Fresh synthetic docs (unique tokens) for ingest slice `s`. */
+  private def freshSlice(s: Int, n: Int) = {
+    import spark.implicits._
+    (0 until n).map(i => (60000L + s * 10 + i,
+        (0 until 40).map(j => s"floortok${s}x${i}y$j").mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
+  test("compact's receipt is exact and no job runs after its write") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_dixj").toString
+    DedupIndex.build(docs.filter(col("doc_id") < 200), "doc_id", "text", tmp)
+    (0 until 2).foreach(s =>
+      DedupIndex.ingest(spark, tmp, freshSlice(s, 4), "doc_id", "text"))
+    val keys = s"$tmp/keys"
+    val rowsBefore = spark.read.parquet(keys).count()
+    val filesBefore = parquetFileCount(keys)
+    // job id -> SQL execution id (none outside an execution), for the
+    // jobs of compact's own group; and the executions that are writes
+    val jobs =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Option[String])]()
+    val writes = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val group = s"dedup-compact-${System.nanoTime()}"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(j.jobId ->
+            Option(j.properties.getProperty("spark.sql.execution.id")))
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains(
+              "InsertIntoHadoopFsRelationCommand") =>
+          writes.add(s.executionId.toString)
+        case _ =>
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val stats = try {
+      sc.setJobGroup(group, group, interruptOnCancel = false)
+      try DedupIndex.compact(spark, tmp).collect()(0)
+      finally sc.clearJobGroup()
+    } finally {
+      org.apache.spark.graft.ListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val seen = jobs.asScala.toSeq.sortBy(_._1)
+    val writeJobs = seen.filter(_._2.exists(writes.contains))
+    assert(writeJobs.nonEmpty, s"no job of compact's write seen: $seen")
+    val after = seen.filter(_._1 > writeJobs.last._1)
+    assert(after.isEmpty, s"jobs ran after compact's write: $after " +
+      s"(all: $seen) — the receipt must come from the write itself")
+    assert(stats.getAs[Long]("rows") == rowsBefore)
+    assert(stats.getAs[Long]("files_before") == filesBefore)
+    assert(stats.getAs[Long]("files_after") == parquetFileCount(keys))
+    assert(spark.read.parquet(keys).count() == rowsBefore)
+  }
+
+  test("ingest returns exactly the rows of its last_ingest/ receipt") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_dixr").toString
+    DedupIndex.build(docs.filter(col("doc_id") < 200), "doc_id", "text", tmp)
+    val syn = (1 to 60).map(i => s"rcpttok$i").mkString(" ")
+    val batch = freshSlice(0, 3).unionByName(
+      Seq((70000L, syn), (70001L, syn + " twin")).toDF("doc_id", "text"))
+    val returned = DedupIndex.ingest(spark, tmp, batch, "doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getAs[Long]("batch_id"),
+        r.getAs[String]("status"), Option(r.getAs[Any]("ref_id")),
+        Option(r.getAs[Any]("est_jaccard")))).toSet
+    val onDisk = rows(spark.read.parquet(s"$tmp/last_ingest"))
+    assert(onDisk.size == 5)
+    assert(onDisk.exists(_._2 == "batch_dup"), s"no batch twin in $onDisk")
+    assert(rows(returned) == onDisk)
+    // the returned frame reads only the receipt: re-running it after
+    // the index moved on still gives the same verdicts
+    DedupIndex.compact(spark, tmp)
+    assert(rows(returned) == onDisk)
+  }
 }
